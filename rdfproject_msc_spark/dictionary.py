@@ -76,6 +76,39 @@ class Dictionary:
         rows = self.df.filter(F.col("term").isin(list(terms))).collect()
         return {r["term"]: r["id"] for r in rows}
 
+    def append_terms(
+        self, terms: list[str], negative_when=None
+    ) -> tuple["Dictionary", dict[str, int]]:
+        """Append query-sized ``terms`` (ones the dictionary lacks) through
+        ``sources/ntriples.extend_dictionary`` — existing ids untouched,
+        new ids deterministic. Returns the extended Dictionary and the
+        new terms' ids. One bounded collect; the rank caches it persists
+        are released right after, and the new rows join the lineage as
+        a JVM-local relation."""
+        from rdfproject_msc_spark.session import local_relation
+        from rdfproject_msc_spark.sources.ntriples import extend_dictionary
+
+        spark = self.df.sparkSession
+        parsed = local_relation(
+            spark,
+            [(t, t, t) for t in terms],
+            "s_term string, p_term string, o_term string",
+        )
+        caches: list = []
+        try:
+            fresh = extend_dictionary(
+                self.df, parsed, negative_when=negative_when, caches=caches
+            ).collect()
+        finally:
+            for c in caches:
+                c.unpersist()
+        ids = {r["term"]: int(r["id"]) for r in fresh}
+        rows = sorted((i, t) for t, i in ids.items())
+        ext = self.df.unionAll(
+            local_relation(spark, rows, "id long, term string")
+        )
+        return Dictionary(ext, broadcast_hint=self.broadcast_hint), ids
+
     def encode_terms(self, terms: list[str]) -> dict[str, int]:
         """Bounded driver-side lookup for SPARQL constants (term → id).
 

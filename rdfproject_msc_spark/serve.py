@@ -84,11 +84,13 @@ def _graph_body(df, bgp, fmt: str, limit: int) -> tuple[str, str]:
     if fmt != "turtle":
         body = "".join(f"{r['s']} {r['p']} {r['o']} .\n" for r in rows)
         return body, "nt"
+    from rdfproject_msc_spark.session import local_relation
     from rdfproject_msc_spark.sources.turtle import format_turtle
 
     prefixes = dict(bgp.prefixes)
     spark = df.sparkSession
-    graph = spark.createDataFrame(
+    graph = local_relation(
+        spark,
         [(r["s"], r["p"], r["o"]) for r in rows],
         "s_term string, p_term string, o_term string",
     )

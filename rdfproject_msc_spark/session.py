@@ -10,13 +10,16 @@ chosen so the same code scales on a multi-executor cluster:
   overridden (AQE coalescing makes the initial number less critical).
 - UTC session timezone so results hash-match the DuckDB oracle.
 - Arrow enabled for the Pandas-UDF slow path (similarity/multimodal ops).
+
+``local_relation`` turns a query-sized Python row list into a relation
+that lives entirely on the JVM (see its docstring).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -48,3 +51,43 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _sql_literal(value) -> str:
+    if value is None:
+        return "NULL"
+    if isinstance(value, str):
+        # UTF-8 hex: no quoting rule or escape setting can alter the text
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(value, int):  # bool included: True/False are SQL literals
+        return str(value)
+    raise TypeError(f"local_relation: unsupported value {value!r}")
+
+
+def local_relation(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A query-sized row list as a JVM ``LocalRelation`` with the DDL
+    ``schema`` (``"name type, ..."``; int, string and NULL values).
+
+    ``spark.createDataFrame(<list>)`` wraps a pickled Python RDD in a
+    ``LogicalRDD``: every later action over a plan holding that leaf
+    runs a Python-worker stage for it again, and copy-on-write lineage
+    keeps such leaves forever. Here the rows travel in one SQL
+    ``VALUES`` table that analysis folds into a ``LocalRelation``: one
+    py4j call, no Python workers, and the rows are part of the plan.
+    An empty list gives an empty ``LocalRelation`` of the schema."""
+    if not rows:
+        jvm = spark._jvm
+        jdf = spark._jsparkSession.createDataFrame(
+            jvm.java.util.ArrayList(),
+            jvm.org.apache.spark.sql.types.StructType.fromDDL(schema),
+        )
+        return DataFrame(jdf, spark)
+    fields = [f.split() for f in schema.split(",")]
+    cols = ", ".join(
+        f"CAST(col{i} AS {typ}) AS `{name}`"
+        for i, (name, typ) in enumerate(fields, 1)
+    )
+    values = ", ".join(
+        "(" + ", ".join(map(_sql_literal, row)) + ")" for row in rows
+    )
+    return spark.sql(f"SELECT {cols} FROM VALUES {values}")

@@ -36,6 +36,7 @@ from pyspark.sql import Column
 
 from rdfproject_msc_spark.dictionary import Dictionary
 from rdfproject_msc_spark.operators.graph import transitive_closure
+from rdfproject_msc_spark.session import local_relation
 from dataclasses import replace as _dc_replace
 
 from rdfproject_msc_spark.sparql.parser import (
@@ -176,7 +177,11 @@ def _dict_relation(dictionary: "Dictionary", id_name: str, term_name: str):
             # the ingest pre-derived (and persisted) the STR values —
             # read them instead of re-running the unescape chain over
             # |dict| rows on every attach (r13, guide §2.3)
-            d = sv.select("id", "term", F.col("__sv").alias(term_name + _SV))
+            d = sv.select(
+                F.col("id").cast("long").alias("id"),
+                "term",
+                F.col("__sv").alias(term_name + _SV),
+            )
         else:
             d = dictionary.df.withColumn(
                 term_name + _SV, _lex_str_value(F.col("id"), F.col("term"))
@@ -1574,7 +1579,8 @@ def _compile_path_relation(
         zero = nodes.select("cs", F.col("cs").alias("co"))
     else:
         seeds = {i for i in (src_id, dst_id) if i is not None}
-        zero = spark.createDataFrame(
+        zero = local_relation(
+            spark,
             [(i, i) for i in seeds] if len(seeds) == 1 else [],
             "cs long, co long",
         )
@@ -1885,7 +1891,8 @@ def _plan_group(
                 zero = nodes.select("cs", F.col("cs").alias("co"))
             else:
                 seeds = {i for i in (s_id, o_id) if i is not None}
-                zero = spark.createDataFrame(
+                zero = local_relation(
+                    spark,
                     [(i, i) for i in seeds] if len(seeds) == 1 else [],
                     "cs long, co long",
                 )
@@ -2823,8 +2830,8 @@ def _plan_group(
             # (each solution replicates per value; the block is
             # query-sized, so the literal relation broadcasts)
             vcol = f"vv{ctx.nid()}_{var}"
-            vals_df = joined.sparkSession.createDataFrame(
-                [(i,) for i in ids], f"{vcol} long"
+            vals_df = local_relation(
+                joined.sparkSession, [(i,) for i in ids], f"{vcol} long"
             )
             joined = joined.crossJoin(F.broadcast(vals_df))
             bound_cols[var] = vcol
@@ -2837,8 +2844,8 @@ def _plan_group(
             # cross join against the query-sized literal relation), while
             # bound rows keep the isin pushdown filter
             vcol = f"__vals{ctx.nid()}"
-            vals_df = joined.sparkSession.createDataFrame(
-                [(i,) for i in ids], f"{vcol} long"
+            vals_df = local_relation(
+                joined.sparkSession, [(i,) for i in ids], f"{vcol} long"
             )
             c = F.col(bound_cols[var])
             bound_b = joined.filter(c.isNotNull()).filter(c.isin(ids))
@@ -2936,7 +2943,7 @@ def _plan_group(
             )
             for row in rows
         ]
-        vals_df = joined.sparkSession.createDataFrame(data, schema)
+        vals_df = local_relation(joined.sparkSession, data, schema)
         colvar = {bound_cols[v]: v for v in vars_}
         branches = []
         for l, keys in _left_mask_branches(
@@ -3818,22 +3825,7 @@ def _with_construct_vocab(
     missing = [t for t in tpl_terms if t not in known]
     if not missing:
         return dictionary
-    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
-
-    spark = dictionary.df.sparkSession
-    parsed = spark.createDataFrame(
-        [(t, t, t) for t in missing],
-        "s_term string, p_term string, o_term string",
-    )
-    fresh = extend_dictionary(dictionary.df, parsed)
-    rows = fresh.collect()  # query-sized by construction
-    ext = dictionary.df.unionAll(
-        spark.createDataFrame(
-            [(int(r["id"]), r["term"]) for r in rows],
-            "id long, term string",
-        )
-    )
-    return Dictionary(ext, broadcast_hint=dictionary.broadcast_hint)
+    return dictionary.append_terms(missing)[0]
 
 
 _CLOCK_LEXICAL = re.compile(

@@ -61,9 +61,16 @@ Scale design (the asymmetry drives every join below):
 - Ground payloads (INSERT/DELETE DATA, template constants) are bounded
   by the query STRING — driver-side handling is query-sized, never
   data-sized (the ``encode_terms`` precedent, dictionary.py:57).
-- INSERT set-semantics never shuffles the store: the "already
-  present?" probe is ``store ⋈ broadcast(delta)`` (one scan, result ≤
-  |delta|), and the union of the survivors is exchange-free.
+- Payload relations are JVM-local (``session.local_relation``): the
+  rows sit in the plan as a ``LocalRelation``, never as a
+  ``createDataFrame`` leaf over a pickled Python RDD that every later
+  read of the updated store would run through Python workers again.
+- INSERT resolves set semantics eagerly and never shuffles the store:
+  one bounded collect of ``store ⋈ broadcast(delta)`` (one scan,
+  result ≤ |delta|) finds the rows already present, and only the
+  genuinely new ones are unioned in. The updated store references the
+  previous one ONCE, so each update adds O(|payload|) plan nodes; an
+  insert with nothing new returns the store unchanged.
 - DELETE anti-joins broadcast the delete set when it is query-sized
   (ground DATA); a DELETE WHERE match set is DATA-sized, so that
   anti-join carries no hint — AQE picks (shuffled when it must).
@@ -82,6 +89,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdfproject_msc_spark.dictionary import Dictionary
+from rdfproject_msc_spark.session import local_relation
 from rdfproject_msc_spark.sparql.parser import (
     SparqlSyntaxError,
     _PREFIX_DECL,
@@ -660,7 +668,6 @@ def _clone_store(
 
 
 def _resolve_ground(
-    spark: SparkSession,
     dictionary: Dictionary,
     quads,
     extend: bool,
@@ -725,27 +732,10 @@ def _resolve_ground(
     known = dictionary.lookup_terms(texts) if texts else {}
     missing = [t for t in texts if t not in known]
     if extend and missing:
-        from rdfproject_msc_spark.sources.ntriples import extend_dictionary
-
-        parsed = spark.createDataFrame(
-            [(t, t, t) for t in missing],
-            "s_term string, p_term string, o_term string",
-        )
-        fresh = extend_dictionary(
-            dictionary.df, parsed, negative_when=negative_when
-        )
-        # payload-bounded collect: the term set comes from the update
-        # STRING, never from data (the encode_terms precedent)
-        for r in fresh.collect():
-            known[r["term"]] = r["id"]
-        dictionary = Dictionary(
-            dictionary.df.unionAll(
-                spark.createDataFrame(
-                    [(known[t], t) for t in missing], "id long, term string"
-                )
-            ),
-            broadcast_hint=dictionary.broadcast_hint,
-        )
+        # payload-bounded: the term set comes from the update STRING,
+        # never from data (the encode_terms precedent)
+        dictionary, minted = dictionary.append_terms(missing, negative_when)
+        known.update(minted)
     rows = []
     for q in quads:
         ids = []
@@ -766,57 +756,70 @@ def _resolve_ground(
     return rows, dictionary
 
 
+def _stored(spark: SparkSession, base: DataFrame, rows, schema: str) -> set:
+    """The rows of ``base`` that match a query-sized key set ``rows``
+    (columns named by ``schema``): one bounded collect of ``base ⋈
+    broadcast(rows)`` — a scan, no shuffle, at most |rows| rows when
+    the keys are unique in ``base``."""
+    keys = [f.split()[0] for f in schema.split(",")]
+    hits = base.join(
+        F.broadcast(local_relation(spark, rows, schema)), keys, "left_semi"
+    )
+    cols = [c for c in ("g", "s", "p", "o") if c in base.columns]
+    return {tuple(r) for r in hits.select(*cols).collect()}
+
+
 def _insert_triples(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
-    """Set-union a query-sized delta into the default graph: one
-    broadcast semi probe of the store (scan, no shuffle), union the
-    genuinely-new rows."""
-    # dedupe driver-side: the payload is a Python list already, and a
-    # DataFrame .distinct() would put a (pointless) hash exchange over
-    # the query-sized delta into every downstream plan
-    delta = spark.createDataFrame(sorted(set(rows)), TRIPLE_SCHEMA)
-    present = store.df.join(F.broadcast(delta), ["s", "p", "o"], "left_semi")
-    fresh = delta.join(F.broadcast(present), ["s", "p", "o"], "left_anti")
-    return _clone_store(store, df=store.df.unionAll(fresh))
+    """Set-union a query-sized delta into the default graph. Set
+    semantics resolve eagerly (``_stored``), so only the genuinely new
+    rows join the lineage, as a JVM-local relation: the new plan reads
+    the previous store once, and an insert with nothing new returns
+    the store unchanged."""
+    # dedupe in Python: the payload is a Python list already
+    delta = sorted(set(rows))
+    present = _stored(spark, store.df, delta, TRIPLE_SCHEMA)
+    fresh = [r for r in delta if r not in present]
+    if not fresh:
+        return store
+    return _clone_store(
+        store,
+        df=store.df.unionAll(local_relation(spark, fresh, TRIPLE_SCHEMA)),
+    )
 
 
 def _insert_quads(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
-    delta = spark.createDataFrame(sorted(set(rows)), QUAD_SCHEMA)
-    if store.has_quads:
-        base = store.quads
-        present = base.join(
-            F.broadcast(delta), ["g", "s", "p", "o"], "left_semi"
+    delta = sorted(set(rows))
+    graphs: dict = {}
+    for g, s, p, o in delta:
+        graphs.setdefault((s, p, o), set()).add(g)
+    # the disjointness flag licenses skipping the RDF-merge dedup
+    # (store.py): keep it only while every (s,p,o) stays in one graph —
+    # within the delta (checked here) and against the stored quads
+    disjoint = store.graphs_disjoint and all(
+        len(gs) == 1 for gs in graphs.values()
+    )
+    if not store.has_quads:
+        return _clone_store(
+            store,
+            quads=local_relation(spark, delta, QUAD_SCHEMA),
+            graphs_disjoint=disjoint,
         )
-        fresh = delta.join(
-            F.broadcast(present), ["g", "s", "p", "o"], "left_anti"
-        )
-        new_quads = base.unionAll(fresh)
-    else:
-        new_quads = delta
-        base = None
-    disjoint = store.graphs_disjoint
     if disjoint:
-        # the flag licenses skipping the RDF-merge dedup (store.py):
-        # preserve it only if the delta provably keeps every (s,p,o)
-        # in one graph — a bounded broadcast probe, else drop to False
-        probe_base = base if base is not None else spark.createDataFrame([], QUAD_SCHEMA)
-        d = delta.select(
-            "s", "p", "o", F.col("g").alias("__g_new")
-        )
-        cross = (
-            probe_base.join(F.broadcast(d), ["s", "p", "o"], "inner")
-            .filter(F.col("g") != F.col("__g_new"))
-            .limit(1)
-            .count()
-        )
-        within = (
-            delta.groupBy("s", "p", "o")
-            .agg(F.count_distinct("g").alias("ng"))
-            .filter(F.col("ng") > 1)
-            .limit(1)
-            .count()
-        )
-        disjoint = cross == 0 and within == 0
-    return _clone_store(store, quads=new_quads, graphs_disjoint=disjoint)
+        # one probe serves set semantics AND the proof: every stored
+        # quad sharing an (s,p,o) with the delta — at most one per delta
+        # triple while the stored graphs are disjoint
+        present = _stored(spark, store.quads, sorted(graphs), TRIPLE_SCHEMA)
+        disjoint = all(graphs[q[1:]] == {q[0]} for q in present)
+    else:
+        present = _stored(spark, store.quads, delta, QUAD_SCHEMA)
+    fresh = [r for r in delta if r not in present]
+    if not fresh:
+        return _clone_store(store, graphs_disjoint=disjoint)
+    return _clone_store(
+        store,
+        quads=store.quads.unionAll(local_relation(spark, fresh, QUAD_SCHEMA)),
+        graphs_disjoint=disjoint,
+    )
 
 
 def _delete_rows(
@@ -825,7 +828,7 @@ def _delete_rows(
     """Anti-join a delete set out of the default graph. ``broadcast_hint``
     marks query-sized sets (ground DATA); data-sized sets (WHERE
     matches) carry no hint — AQE picks the strategy."""
-    delta = spark.createDataFrame(rows, TRIPLE_SCHEMA)
+    delta = local_relation(spark, rows, TRIPLE_SCHEMA)
     return _delete_df(store, delta, broadcast_hint)
 
 
@@ -841,7 +844,7 @@ def _delete_df(
 def _delete_quads(spark: SparkSession, store: TripleStore, rows) -> TripleStore:
     if not store.has_quads:
         return store  # no named graphs: nothing those rows could match
-    delta = spark.createDataFrame(rows, QUAD_SCHEMA)
+    delta = local_relation(spark, rows, QUAD_SCHEMA)
     return _clone_store(
         store,
         quads=store.quads.join(
@@ -911,25 +914,10 @@ def _ensure_gid(engine, slot, negative_when) -> int:
     gid = _slot_gid(engine, slot)
     if gid is not None:
         return gid
-    from rdfproject_msc_spark.sources.ntriples import extend_dictionary
-
-    spark = engine.spark
-    text = slot[1]
-    parsed = spark.createDataFrame(
-        [(text, text, text)],
-        "s_term string, p_term string, o_term string",
+    engine.dictionary, minted = engine.dictionary.append_terms(
+        [slot[1]], negative_when
     )
-    fresh = extend_dictionary(
-        engine.dictionary.df, parsed, negative_when=negative_when
-    )
-    gid = int(fresh.collect()[0]["id"])
-    engine.dictionary = Dictionary(
-        engine.dictionary.df.unionAll(
-            spark.createDataFrame([(gid, text)], "id long, term string")
-        ),
-        broadcast_hint=engine.dictionary.broadcast_hint,
-    )
-    return gid
+    return minted[slot[1]]
 
 
 def _named_graph_exists(store: TripleStore, gid: int | None) -> bool:
@@ -977,18 +965,18 @@ def _apply_graph_manage(
     if op.op == "drop":
         if op.target == "default":
             return _clone_store(
-                store, df=spark.createDataFrame([], TRIPLE_SCHEMA)
+                store, df=local_relation(spark, [], TRIPLE_SCHEMA)
             )
         if op.target in ("named", "all"):
             new = store
             if op.target == "all":
                 new = _clone_store(
-                    new, df=spark.createDataFrame([], TRIPLE_SCHEMA)
+                    new, df=local_relation(spark, [], TRIPLE_SCHEMA)
                 )
             if new.has_quads:
                 new = _clone_store(
                     new,
-                    quads=spark.createDataFrame([], QUAD_SCHEMA),
+                    quads=local_relation(spark, [], QUAD_SCHEMA),
                     graphs_disjoint=True,
                 )
             return new
@@ -1042,7 +1030,7 @@ def _apply_graph_manage(
     base = (
         store.quads
         if store.has_quads
-        else spark.createDataFrame([], QUAD_SCHEMA)
+        else local_relation(spark, [], QUAD_SCHEMA)
     )
     if op.op == "add":
         existing = base.filter(F.col("g") == F.lit(dst_gid)).select(
@@ -1066,7 +1054,7 @@ def _apply_graph_manage(
     if op.op == "move":
         if op.src == "default":
             new = _clone_store(
-                new, df=spark.createDataFrame([], TRIPLE_SCHEMA)
+                new, df=local_relation(spark, [], TRIPLE_SCHEMA)
             )
         else:
             new = _clone_store(
@@ -1092,7 +1080,7 @@ def apply_update(engine, src: str, negative_when=None) -> None:
             if not op.quads:
                 continue
             rows, new_dict = _resolve_ground(
-                spark, engine.dictionary, op.quads, op.insert, negative_when
+                engine.dictionary, op.quads, op.insert, negative_when
             )
             if op.insert:
                 engine.dictionary = new_dict
@@ -1294,17 +1282,10 @@ def apply_update(engine, src: str, negative_when=None) -> None:
             )
             new_terms = [t for t in ins_texts if t not in const_ids]
             if new_terms:
-                _, engine.dictionary = _resolve_ground(
-                    spark,
-                    engine.dictionary,
-                    tuple(
-                        (None, ("term", t), ("term", t), ("term", t))
-                        for t in new_terms
-                    ),
-                    extend=True,
-                    negative_when=negative_when,
+                engine.dictionary, minted = engine.dictionary.append_terms(
+                    new_terms, negative_when
                 )
-                const_ids.update(engine.dictionary.lookup_terms(new_terms))
+                const_ids.update(minted)
             # both sets instantiate against the SAME pre-state solutions.
             # localCheckpoint the match-sized DELTAS (not the store): it
             # truncates the solutions lineage so chained updates don't
@@ -1433,19 +1414,7 @@ def apply_update(engine, src: str, negative_when=None) -> None:
                 store = _clone_store(store, df=store.df.unionAll(fresh))
             else:
                 # the graph label itself may be a NEW term
-                _, engine.dictionary = _resolve_ground(
-                    spark,
-                    engine.dictionary,
-                    ((None, op.graph_slot, op.graph_slot, op.graph_slot),),
-                    extend=True,
-                    negative_when=negative_when,
-                )
-                slot = op.graph_slot
-                gid = (
-                    int(slot[1])
-                    if slot[0] == "id"
-                    else engine.dictionary.lookup_terms([slot[1]])[slot[1]]
-                )
+                gid = _ensure_gid(engine, op.graph_slot, negative_when)
                 q = df.select(
                     F.lit(gid).cast("long").alias("g"), "s", "p", "o"
                 )
@@ -1466,12 +1435,12 @@ def apply_update(engine, src: str, negative_when=None) -> None:
             engine.store = store
         elif isinstance(op, Clear):
             if op.target in ("default", "all"):
-                empty = spark.createDataFrame([], TRIPLE_SCHEMA)
+                empty = local_relation(spark, [], TRIPLE_SCHEMA)
                 store = _clone_store(store, df=empty)
             if op.target in ("named", "all") and store.has_quads:
                 store = _clone_store(
                     store,
-                    quads=spark.createDataFrame([], QUAD_SCHEMA),
+                    quads=local_relation(spark, [], QUAD_SCHEMA),
                     graphs_disjoint=True,
                 )
             if op.target == "graph" and store.has_quads:

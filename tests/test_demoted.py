@@ -117,6 +117,15 @@ def test_sparql_filter(spark, sf_dir):
     )
 
 
+def test_sparql_graph_matches_oracle(spark, sf_dir):
+    """Demoted r14 (it was registry row 51, past the 50-row
+    correctness window): GRAPH ?g over the named-graph quads, joined
+    with a default-graph pattern."""
+    assert_matches_oracle(
+        R.sparql_graph(spark, sf_dir), R.SPARQL_GRAPH_SQL, sf_dir
+    )
+
+
 def test_sparql_2hop_store(spark, sf_dir):
     """Demoted r5 (slot → sparql_nested): the persisted sign-split store
     variant of sparql_2hop — partition-pruned scans feeding the same

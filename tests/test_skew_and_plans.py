@@ -232,3 +232,23 @@ def test_plans_md_matches_headline_registry():
         f"missing={sorted(headline - sections)} "
         f"stale={sorted(sections - headline)}"
     )
+
+
+def test_corpus_curate_scans_documents_once(spark, sf_dir):
+    """Plan pin for curate's one-element explode barrier
+    (operators/curate.py): without it Catalyst pushes the quality filter
+    below the exact-dedup aggregate on the stats consumer only, the two
+    consumers of the deduplicated corpus stop sharing a subtree, and the
+    documents are scanned (and dedup-shuffled) twice."""
+    from rdfproject_msc_spark.registry import REGISTRY
+
+    df = REGISTRY["corpus_curate"].fn(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("Initial Plan")[0]
+    scans = [
+        line
+        for line in final.splitlines()
+        if "FileScan" in line and "documents" in line
+    ]
+    assert len(scans) == 1, scans
